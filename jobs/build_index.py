@@ -26,7 +26,6 @@ def main() -> None:
     ap.add_argument("--lang", default="ko")
     ap.add_argument("--mode", default="standard", choices=["standard", "keyword", "similarity"])
     ap.add_argument("--compound-noun-min-length", type=int, default=3)
-    ap.add_argument("--no-blocks", action="store_true")
     ap.add_argument(
         "--warc",
         action="store_true",
@@ -143,7 +142,6 @@ def main() -> None:
         mode=args.mode,
         compound_noun_min_length=args.compound_noun_min_length,
         lang_filter=args.lang or None,
-        with_blocks=not args.no_blocks,
         with_anchors=args.with_anchors,
         anchor_external_only=args.anchor_external_only,
         with_titles=args.with_titles,

@@ -14,10 +14,10 @@ index (the continuous-crawl counterpart of jobs/build_index.py).
     # block-max index (byte-identical to a from-scratch batch build)
     ... jobs/ingest.py compact --index /path/idx [--output /path/out]
 
-Ingest appends cheap doc-disjoint deltas (no block rebuild on the hot
-path); compact pays one doc_id range shuffle and rebuilds postings +
-stats + blocks over the union — run it on whatever cadence serving
-freshness requires.
+Ingest appends cheap doc-disjoint postings deltas (no block rebuild on
+the hot path); compact pays one doc_id range shuffle, packs the union
+into the batch build's layout (partials + stats + blocks) — run it on
+whatever cadence serving freshness requires.
 """
 
 from __future__ import annotations
@@ -42,7 +42,7 @@ def main() -> None:
         action="store_true",
         help="keep the micro-batch stream running (default: availableNow catch-up)",
     )
-    ap.add_argument("--output", help="compacted index path (compact; default <index>/compacted)")
+    ap.add_argument("--output", help="compacted index path (compact; default: a fresh <index>/versions/vN behind the serving pointer)")
     ap.add_argument("--hot-min-df", type=int, default=1000)
     ap.add_argument(
         "--max-files-per-trigger",

@@ -123,7 +123,6 @@ class SearchEngine:
             mode=mode,
             compound_noun_min_length=compound_noun_min_length,
             lang_filter=lang_filter,
-            with_blocks=True,
             with_anchors=with_anchors,
             anchor_external_only=anchor_external_only,
             with_titles=with_titles,

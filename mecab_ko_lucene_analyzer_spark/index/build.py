@@ -4,25 +4,30 @@ it is a native Spark plan.
 
 Plan discipline (the part that must survive 100×):
 
-* tokenization (the expensive Arrow UDF) happens **exactly once**: every
-  derived table (term/doc/corpus stats) is computed *from the postings
-  relation*, never from a second scan of the corpus. ``doc_len`` is
-  ``sum(tf)`` over a doc's postings — identical to the token count.
-* the corpus is pruned to ``(url, text)`` before the docID range
-  shuffle, so page ``html`` bytes never cross the wire.
-* one wide exchange builds postings (``groupBy(term, doc_id)`` with
-  map-side partial aggregation); stats reuse that output.
+* one on-disk layout: the tokenize pass emits compressed partial
+  blocks (``partials``) straight from the analyzer, and every other
+  table — term/doc/corpus stats, block-max ``blocks``, the row-postings
+  view — is derived from them, never from a second scan of the corpus.
+* tokenization (the expensive Arrow UDF) happens **exactly once**, and
+  a document's tokens never leave their partition: the only wide
+  exchange is the (term, salt) range shuffle of the blocks stage.
+* the corpus is pruned to ``(url, text)`` before any docID pass, so
+  page ``html`` bytes never cross the wire.
+* stats and blocks run through one step, :func:`stats_and_blocks`,
+  shared by the batch build and incremental compaction.
 """
 
 from __future__ import annotations
 
+import threading
+import time
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.udfs import tokens_table
 from .docids import assign_doc_ids
+from .manifest import BuildManifest, run_stage
 
 __all__ = [
     "InvertedIndex",
@@ -31,6 +36,7 @@ __all__ = [
     "load_index",
     "corpus_partials",
     "postings_from_partials",
+    "stats_and_blocks",
 ]
 
 K1 = 1.2
@@ -82,7 +88,7 @@ def _stable_plan(jplan) -> bool:
 
 
 def _docid_partitions(pages, lang_filter, num_partitions, order):
-    """Shared docID scaffold for the posting/partial emitters:
+    """DocID scaffold for the partials emitter and doc_map:
     prune → (optionally) canonical-order shuffle → per-partition row
     counts → docID base offsets. Returns ``(text_parts, map_parts,
     offsets, n_docs)``.
@@ -161,136 +167,6 @@ def _doc_map_df(map_parts, offsets):
     return map_parts.mapInPandas(emit_map, map_schema)
 
 
-def corpus_postings(
-    pages: DataFrame,
-    lang_filter: str | None = "ko",
-    mode: str = "standard",
-    compound_noun_min_length: int = 3,
-    num_partitions: int | None = None,
-    order: str = "input",
-):
-    """Corpus → ``(postings, doc_map)`` with ZERO token-level shuffle.
-
-    A document's tokens never leave their partition, so the
-    ``(term, doc_id)`` aggregation is partition-local by construction —
-    the emitter aggregates tf/positions per doc in Python and emits
-    posting rows directly. The only wide exchange in the whole index
-    build is the salted term repartition of the block stage (I4),
-    exactly the shuffle the format needs.
-
-    docID order (both dense + deterministic, I1):
-
-    * ``order="input"`` (default): docID = global rank in (input split,
-      row) order. For an immutable table snapshot the file listing and
-      row order are stable, so ids are reproducible across runs/retries
-      — and the count pass is a *narrow* job: at 10^12-doc scale no
-      byte of the corpus ever crosses the network before the term
-      shuffle.
-    * ``order="url"``: docID = global rank of ``url`` (canonical order,
-      partition-count independent) via one range shuffle of the pruned
-      corpus, persisted so both passes share it.
-
-    Returns ``(postings, doc_map, n_docs, counters)`` — the doc count
-    falls out of the docID offset pass, and ``counters`` is a pair of
-    Spark accumulators ``(total_tokens, postings_rows)`` updated inside
-    the tokenize ``mapInPandas``. Accumulator updates in a
-    TRANSFORMATION can replay under task retries / speculation, so
-    these are informational lineage counters only — anything that feeds
-    scoring (avgdl → block_max_impact → BM25) is derived retry-exactly
-    from the written doc_stats via ``Observation`` in the stats stage.
-    """
-    import pandas as pd
-    import pyspark.sql.types as T
-    from pyspark import StorageLevel
-
-    from ..analysis.tokenizer import (
-        get_lattice_provider,
-        index_token_stream,
-        tokenize,
-    )
-
-    spark = pages.sparkSession
-    text_parts, map_parts, offsets, acc = _docid_partitions(
-        pages, lang_filter, num_partitions, order
-    )
-
-    postings_schema = T.StructType(
-        [
-            T.StructField("term", T.StringType(), False),
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("tf", T.IntegerType(), False),
-            # per-doc positions as delta+varint bytes: ~2 bytes/posting
-            # through the term shuffle instead of a 12+ byte array slot,
-            # and block encoding becomes pure byte concatenation
-            T.StructField("positions", T.BinaryType(), False),
-            T.StructField("doc_len", T.IntegerType(), False),
-        ]
-    )
-
-    acc_tokens = spark.sparkContext.accumulator(0)
-    acc_postings = spark.sparkContext.accumulator(0)
-
-    def emit_postings(batches):
-        from .codec import encode_varint_groups
-
-        provider = get_lattice_provider()
-        seen = 0
-        base = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if base is None:
-                base = offsets[int(pdf["_pid"].iloc[0])]
-            terms: list[str] = []
-            doc_ids: list[int] = []
-            tfs: list[int] = []
-            doc_lens: list[int] = []
-            flat_deltas: list[int] = []  # all position deltas, batch-wide
-            for off, txt in enumerate(pdf["text"]):
-                d = base + seen + off
-                # flat cached stream — no per-occurrence Pos objects
-                # (the build is allocator-bandwidth-bound without this)
-                t_terms, t_incrs = index_token_stream(
-                    txt or "", mode, compound_noun_min_length, provider
-                )
-                per_term: dict[str, list[int]] = {}
-                position = -1
-                for term_s, inc in zip(t_terms, t_incrs):
-                    position += inc
-                    per_term.setdefault(term_s, []).append(position)
-                dl = len(t_terms)
-                for term, plist in per_term.items():
-                    terms.append(term)
-                    doc_ids.append(d)
-                    tfs.append(len(plist))
-                    doc_lens.append(dl)
-                    prev = 0
-                    for q in plist:
-                        flat_deltas.append(q - prev)
-                        prev = q
-            # ONE vectorized varint pass for the whole batch
-            positions = encode_varint_groups(flat_deltas, tfs)
-            seen += len(pdf)
-            acc_tokens.add(len(flat_deltas))
-            acc_postings.add(len(terms))
-            yield pd.DataFrame(
-                {
-                    "term": terms,
-                    "doc_id": pd.Series(doc_ids, dtype="int64"),
-                    "tf": pd.Series(tfs, dtype="int32"),
-                    "positions": positions,
-                    "doc_len": pd.Series(doc_lens, dtype="int32"),
-                }
-            )
-
-    return (
-        text_parts.mapInPandas(emit_postings, postings_schema),
-        _doc_map_df(map_parts, offsets),
-        acc,
-        (acc_tokens, acc_postings),
-    )
-
-
 def corpus_partials(
     pages: DataFrame,
     lang_filter: str | None = "ko",
@@ -300,14 +176,15 @@ def corpus_partials(
     order: str = "input",
     block_size: int | None = None,
 ):
-    """Corpus → ``(partials, doc_map)`` — the FUSED build path: the
-    tokenize pass emits partial-block rows (the compressed map-side-
-    combined form, :data:`..index.blocks.PARTIAL_SCHEMA`) directly, so
-    the ~35× larger row-postings relation never crosses the Python↔JVM
-    boundary and is never materialized. This is the 100×-scale shape:
-    the only thing a build ever writes or shuffles is ≈ the compressed
-    index size. Row postings, term/doc stats are all DERIVABLE from
-    partials (:func:`postings_from_partials`, :func:`_stats_from_partials`).
+    """Corpus → ``(partials, doc_map, n_docs, counters)`` with ZERO
+    token-level shuffle: the tokenize pass emits partial-block rows
+    (the compressed map-side-combined form,
+    :data:`..index.blocks.PARTIAL_SCHEMA`) directly, so the ~35× larger
+    row-postings relation never crosses the Python↔JVM boundary and is
+    never materialized. This is the 100×-scale shape: the only thing a
+    build ever writes or shuffles is ≈ the compressed index size. Row
+    postings, term/doc stats are all DERIVABLE from partials
+    (:func:`postings_from_partials`, :func:`_stats_from_partials`).
 
     Salting is NOT applied here (hot-term dfs aren't known until the
     stats stage); the blocks stage assigns ``salt = first_doc >>
@@ -316,7 +193,23 @@ def corpus_partials(
     remain doc-contiguous and the salted groups concatenate without a
     re-merge, exactly as with per-doc salting.
 
-    Same docID determinism and counters as :func:`corpus_postings`.
+    docID order (both dense + deterministic, I1):
+
+    * ``order="input"`` (default): docID = global rank in (input split,
+      row) order. For an immutable table snapshot the file listing and
+      row order are stable, so ids are reproducible across runs/retries
+      — and the count pass is a *narrow* job.
+    * ``order="url"``: docID = global rank of ``url`` (canonical order,
+      partition-count independent) via one range shuffle of the pruned
+      corpus, persisted so both passes share it.
+
+    ``n_docs`` falls out of the docID offset pass; ``counters`` is a
+    pair of Spark accumulators ``(total_tokens, postings_rows)`` updated
+    inside the tokenize pass. Accumulator updates in a TRANSFORMATION
+    can replay under task retries / speculation, so these are
+    informational lineage counters only — anything that feeds scoring
+    (avgdl → block_max_impact → BM25) is derived retry-exactly from the
+    written doc_stats via ``Observation`` in :func:`stats_and_blocks`.
     """
     import numpy as np
 
@@ -461,9 +354,9 @@ def corpus_partials(
 
 
 def postings_from_partials(partials: DataFrame) -> DataFrame:
-    """Row-postings VIEW decoded from partial blocks — same rows as the
-    legacy materialized ``postings`` table (term, doc_id, tf, positions,
-    doc_len), computed on demand with vectorized varint decodes and
+    """Row-postings VIEW decoded from partial blocks — one row per
+    (term, doc_id) with tf, delta+varint ``positions`` bytes and
+    doc_len, computed on demand with vectorized varint decodes and
     zero-copy per-doc position slicing (per-doc payload bounds come
     from the varint continuation bits; the position bytes themselves
     are never re-encoded)."""
@@ -649,9 +542,6 @@ _READ_SCHEMAS = {
     "term_stats": "term string, df bigint",
     "doc_stats": "doc_id bigint, doc_len bigint",
     "corpus_stats": "n_docs bigint, avgdl double",
-    "postings": (
-        "term string, doc_id bigint, tf int, positions binary, doc_len int"
-    ),
     "blocks": (
         "term string, first_doc bigint, n_docs int, doc_deltas binary, "
         "tfs binary, pos_deltas binary, doc_lens binary, "
@@ -693,17 +583,12 @@ def _footer_row_count(spark: SparkSession, path: str, name: str) -> int:
 
 def _stats_from_postings(postings: DataFrame):
     term_stats = postings.groupBy("term").agg(F.count("*").alias("df"))
-    if "doc_len" in postings.columns:
-        # doc_len is denormalized onto every posting row → the per-doc
-        # "aggregation" is a partial-agg first(): the exchange carries
-        # ~1 row/doc. (A zero-shuffle mapInPandas dedup was considered
-        # and rejected: a parquet file bigger than maxPartitionBytes
-        # splits mid-document and would double-count — not 100×-safe.)
-        doc_stats = postings.groupBy("doc_id").agg(
-            F.first("doc_len").cast("long").alias("doc_len")
-        )
-    else:
-        doc_stats = postings.groupBy("doc_id").agg(F.sum("tf").alias("doc_len"))
+    # doc_len is denormalized onto every posting row → the per-doc
+    # "aggregation" is a partial-agg first(): the exchange carries
+    # ~1 row/doc
+    doc_stats = postings.groupBy("doc_id").agg(
+        F.first("doc_len").cast("long").alias("doc_len")
+    )
     corpus_stats = doc_stats.agg(
         F.count("*").alias("n_docs"), F.avg("doc_len").alias("avgdl")
     )
@@ -720,7 +605,9 @@ class InvertedIndex:
     min/max row-group stats cannot prune (docIDs spread across every
     term's row groups) — a full postings scan at 100x scale."""
 
-    postings: DataFrame  # term, doc_id, tf, positions array<int>
+    # term, doc_id, tf, positions (delta+varint bytes), doc_len — the
+    # row view decoded from the partial blocks (postings_from_partials)
+    postings: DataFrame
     term_stats: DataFrame  # term, df
     doc_stats: DataFrame  # doc_id, doc_len
     corpus_stats: DataFrame  # n_docs, avgdl
@@ -739,27 +626,127 @@ def build_index(
     mode: str = "standard",
     compound_noun_min_length: int = 3,
     lang_filter: str | None = "ko",
-    with_doc_ids: bool = True,
 ) -> InvertedIndex:
     """webpages → inverted index (lazy: call ``.cache()`` or use
     :func:`build_and_write` to avoid recomputing tokenization when more
-    than one member table is consumed)."""
-    if not with_doc_ids and "doc_id" in pages.columns:
-        docs = pages if lang_filter is None else pages.filter(F.col("lang") == lang_filter)
-        tokens = tokens_table(docs, "doc_id", "text", mode, compound_noun_min_length)
-        from ..functions.udfs import encode_positions_udf
-
-        postings = tokens.groupBy("term", "doc_id").agg(
-            F.count("*").alias("tf"),
-            F.sort_array(F.collect_list("position")).alias("positions_arr"),
-        ).withColumn(
-            "positions", encode_positions_udf()(F.col("positions_arr"))
-        ).drop("positions_arr")
-    else:
-        postings, _, _, _ = corpus_postings(
-            pages, lang_filter, mode, compound_noun_min_length
-        )
+    than one member table is consumed). ``postings`` is the row view
+    decoded from :func:`corpus_partials`; the stats derive from that
+    view, so caching it tokenizes once."""
+    partials, _, _, _ = corpus_partials(
+        pages, lang_filter, mode, compound_noun_min_length
+    )
+    postings = postings_from_partials(partials)
     return InvertedIndex(postings, *_stats_from_postings(postings))
+
+
+def stats_and_blocks(
+    spark: SparkSession,
+    base_path: str,
+    manifest: BuildManifest,
+    hot_min_df: int = 1000,
+    salt_shift: int | None = None,
+) -> None:
+    """``partials`` → term/doc/corpus stats and block-max ``blocks``:
+    the one stats→blocks step of every index writer (the batch build
+    and incremental compaction).
+
+    The manifest alone decides what runs: the stats stage, the blocks
+    stage, or both. Blocks-only (a resume after stats completed) reads
+    ``term_stats`` back and takes n_docs/avgdl from the stats stage's
+    manifest counters. When both run, only ``avgdl`` (the Observation
+    riding the doc_stats write) is on the blocks stage's critical path:
+    the term_stats write runs on a thread while the blocks exchange
+    executes, and the blocks join consumes the CACHED term_stats frame
+    (same rows the parquet write persists). Each stage is recorded only
+    after all of its sinks — the threaded term_stats write included —
+    have committed, so a crash records nothing new and the rerun is
+    byte-identical. The stats ``seconds`` span until that write ends."""
+    from pyspark.sql import Observation
+
+    from .blocks import SALT_SHIFT, build_blocks_from_partials
+
+    run_stats = not manifest.stage_complete("stats")
+    run_blocks = not manifest.stage_complete("blocks")
+    if not (run_stats or run_blocks):
+        return
+    t0 = time.perf_counter()
+    partials = _read_stage_table(spark, base_path, "partials")
+    thread = None
+    if run_stats:
+        term_stats, doc_stats = _stats_from_partials(partials)
+        term_stats = term_stats.persist()
+        ts_err: list[BaseException] = []
+        ts_end: list[float] = []
+
+        def _write_terms():
+            try:
+                term_stats.write.mode("overwrite").parquet(f"{base_path}/term_stats")
+            except BaseException as e:  # re-raised on the calling thread
+                ts_err.append(e)
+            finally:
+                ts_end.append(time.perf_counter())
+
+        thread = threading.Thread(
+            target=_write_terms, name="term_stats-write", daemon=True
+        )
+        thread.start()
+    else:
+        term_stats = _read_stage_table(spark, base_path, "term_stats")
+        counters = manifest.stages["stats"]["counters"]
+        n_docs, avgdl = counters["n_docs"], counters["avgdl"]
+    try:
+        if run_stats:
+            # corpus stats ride the doc_stats write via Observation —
+            # exact under task retries / speculation (observed metrics
+            # are action-consistent), unlike transformation-side
+            # accumulators; avgdl feeds block_max_impact and BM25
+            obs = Observation("corpus")
+            doc_stats.observe(
+                obs,
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum("doc_len").alias("dl_sum"),
+            ).write.mode("overwrite").parquet(f"{base_path}/doc_stats")
+            vals = obs.get
+            n_docs = int(vals["n_docs"])
+            avgdl = (vals["dl_sum"] or 0) / n_docs if n_docs else 0.0
+            _write_corpus_stats(spark, f"{base_path}/corpus_stats", n_docs, avgdl)
+        t_blocks = time.perf_counter()
+        if run_blocks:
+            # block rows leave the re-blocker (term, first_doc)-sorted
+            # within partitions, so parquet row-group min/max stats
+            # prune term-filtered scans
+            build_blocks_from_partials(
+                partials,
+                term_stats,
+                n_docs=n_docs,
+                avgdl=avgdl,
+                hot_min_df=hot_min_df,
+                salt_shift=salt_shift if salt_shift is not None else SALT_SHIFT,
+            ).write.mode("overwrite").parquet(f"{base_path}/blocks")
+    finally:
+        if thread is not None:
+            thread.join()
+            term_stats.unpersist()
+    if run_stats:
+        if ts_err:
+            raise ts_err[0]
+        manifest.record(
+            "stats",
+            f"{base_path}/term_stats",
+            {"n_docs": n_docs, "avgdl": avgdl},
+            max(ts_end[0], t_blocks) - t0,
+        )
+    if run_blocks:
+        manifest.record(
+            "blocks",
+            f"{base_path}/blocks",
+            {
+                "blocks_written": _footer_row_count(
+                    spark, f"{base_path}/blocks", "blocks"
+                )
+            },
+            time.perf_counter() - t_blocks,
+        )
 
 
 def build_and_write(
@@ -768,7 +755,7 @@ def build_and_write(
     mode: str = "standard",
     compound_noun_min_length: int = 3,
     lang_filter: str | None = "ko",
-    with_blocks: bool = False,
+    with_blocks: bool = True,
     hot_min_df: int = 1000,
     salt_shift: int | None = None,
     doc_order: str = "input",
@@ -781,25 +768,26 @@ def build_and_write(
 ) -> InvertedIndex:
     """Materialize the index with per-stage checkpoints (I6):
 
-    1. ``postings``  — ONE tokenize + shuffle pass (+ ``doc_map``)
-    2. ``stats``     — derived from the written postings
-    3. ``blocks``    — salted sorted shuffle → compressed block postings
+    1. ``partials`` — ONE tokenize pass emits compressed partial blocks
+       (:func:`corpus_partials`, + ``doc_map``); row postings are never
+       materialized, and ``load_index(...).postings`` is a decoded view
+    2. ``stats``    — term/doc/corpus stats derived from the partials
+    3. ``blocks``   — salted range shuffle → block-max postings
 
-    A rerun skips completed stages (manifest + ``_SUCCESS``); docIDs are
+    Stages 2 and 3 run through :func:`stats_and_blocks`. A rerun skips
+    completed stages (manifest + ``_SUCCESS``); docIDs are
     deterministic, so resumed output is byte-identical.
 
-    ``with_blocks=True`` (a serving build) uses the FUSED pipeline:
-    stage 1 is ``partials`` — the tokenize pass emits compressed
-    partial blocks directly (``corpus_partials``), row postings are
-    never materialized (≈35× less data written/scanned between
-    stages), and ``load_index(...).postings`` is a decoded view.
-    ``with_blocks=False`` keeps the legacy row-postings layout (the
-    postings table IS the requested product there).
+    ``with_blocks`` must be True: the block-max layout is the only one
+    this writer produces.
     """
     from contextlib import contextmanager
 
-    from .manifest import BuildManifest, run_stage
-
+    if not with_blocks:
+        raise ValueError(
+            "build_and_write writes the block-max layout only; "
+            "with_blocks=False is not supported"
+        )
     spark = pages.sparkSession
 
     @contextmanager
@@ -857,21 +845,14 @@ def build_and_write(
             # blocks-stage parameters belong in the fingerprint too:
             # rerunning with different salting must NOT skip the blocks
             # stage and silently serve the old un-resalted blocks
-            "with_blocks": with_blocks,
             "hot_min_df": hot_min_df,
             "salt_shift": salt_shift,
             "with_forward": with_forward,
         },
     )
 
-    fused = with_blocks
-    emit_stage = "partials" if fused else "postings"
-
     def stage_emit():
-        import threading
-
-        maker = corpus_partials if fused else corpus_postings
-        emitted, doc_map, n_docs, (acc_tokens, acc_postings) = maker(
+        partials, doc_map, n_docs, (acc_tokens, acc_postings) = corpus_partials(
             pages, lang_filter, mode, compound_noun_min_length, order=doc_order
         )
         # doc_map is independent of the main sink — submit it
@@ -888,7 +869,7 @@ def build_and_write(
 
         t = threading.Thread(target=_write_map, daemon=True)
         t.start()
-        emitted.write.mode("overwrite").parquet(f"{base_path}/{emit_stage}")
+        partials.write.mode("overwrite").parquet(f"{base_path}/partials")
         t.join()
         if map_err:
             raise map_err[0]
@@ -903,143 +884,8 @@ def build_and_write(
         }
 
     with _build_confs():
-        run_stage(manifest, emit_stage, f"{base_path}/{emit_stage}", stage_emit)
-
-    def stage_stats():
-        import threading
-
-        from pyspark.sql import Observation
-
-        if fused:
-            partials = _read_stage_table(spark, base_path, "partials")
-            term_stats, doc_stats = _stats_from_partials(partials)
-        else:
-            postings = _read_stage_table(spark, base_path, "postings")
-            term_stats, doc_stats, _ = _stats_from_postings(postings)
-        # corpus stats ride the doc_stats write via Observation — exact
-        # under task retries / speculation (observed metrics are action-
-        # consistent), unlike transformation-side accumulators which
-        # double-count replayed batches; avgdl feeds block_max_impact
-        # and BM25, so it must be retry-exact. Zero extra pass.
-        obs = Observation("corpus")
-        doc_stats = doc_stats.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("doc_len").alias("dl_sum"),
-        )
-        # the two aggregations are independent — overlap their job
-        # latencies instead of paying them back-to-back
-        ts_err: list[BaseException] = []
-
-        def _write_terms():
-            try:
-                term_stats.write.mode("overwrite").parquet(f"{base_path}/term_stats")
-            except BaseException as e:
-                ts_err.append(e)
-
-        t = threading.Thread(target=_write_terms, daemon=True)
-        t.start()
-        doc_stats.write.mode("overwrite").parquet(f"{base_path}/doc_stats")
-        vals = obs.get
-        n_docs = int(vals["n_docs"])
-        avgdl = (vals["dl_sum"] or 0) / n_docs if n_docs else 0.0
-        t.join()
-        if ts_err:
-            raise ts_err[0]
-        _write_corpus_stats(spark, f"{base_path}/corpus_stats", n_docs, avgdl)
-        return {"n_docs": n_docs, "avgdl": avgdl}
-
-    def stats_blocks_overlapped():
-        """Fresh fused build: overlap the stats-stage writes with the
-        blocks stage (guide §2.6 — concurrent independent jobs). Only
-        ``avgdl`` (the Observation riding the doc_stats write) is on
-        the blocks stage's critical path; the term_stats write and the
-        driver-side corpus write are not, so they run while the blocks
-        exchange/re-block executes. The blocks join consumes the
-        CACHED term_stats DataFrame (same rows the parquet write
-        persists), so it neither waits for that write nor re-reads it.
-        Both stages are recorded in the manifest only after every sink
-        (incl. the threaded term_stats write) has its ``_SUCCESS`` —
-        a crash mid-way records nothing and the sequential resume path
-        re-runs from the last completed stage, byte-identical."""
-        import threading
-        import time as _time
-
-        from pyspark.sql import Observation
-
-        from .blocks import SALT_SHIFT, build_blocks_from_partials
-
-        t0 = _time.perf_counter()
-        partials = _read_stage_table(spark, base_path, "partials")
-        term_stats, doc_stats = _stats_from_partials(partials)
-        ts = term_stats.persist()
-        ts_err: list[BaseException] = []
-
-        def _write_terms():
-            try:
-                ts.write.mode("overwrite").parquet(f"{base_path}/term_stats")
-            except BaseException as e:
-                ts_err.append(e)
-
-        th = threading.Thread(target=_write_terms, daemon=True)
-        th.start()
-        try:
-            obs = Observation("corpus")
-            doc_stats = doc_stats.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("doc_len").alias("dl_sum"),
-            )
-            doc_stats.write.mode("overwrite").parquet(f"{base_path}/doc_stats")
-            vals = obs.get
-            n_docs = int(vals["n_docs"])
-            avgdl = (vals["dl_sum"] or 0) / n_docs if n_docs else 0.0
-            _write_corpus_stats(spark, f"{base_path}/corpus_stats", n_docs, avgdl)
-            t_stats = _time.perf_counter()
-            blocks = build_blocks_from_partials(
-                partials,
-                ts,
-                n_docs=n_docs,
-                avgdl=avgdl,
-                hot_min_df=hot_min_df,
-                salt_shift=salt_shift if salt_shift is not None else SALT_SHIFT,
-            )
-            blocks.write.mode("overwrite").parquet(f"{base_path}/blocks")
-        finally:
-            th.join()
-            ts.unpersist()
-        if ts_err:
-            raise ts_err[0]
-        manifest.record(
-            "stats",
-            f"{base_path}/term_stats",
-            {"n_docs": n_docs, "avgdl": avgdl},
-            t_stats - t0,
-        )
-        manifest.record(
-            "blocks",
-            f"{base_path}/blocks",
-            {
-                "blocks_written": _footer_row_count(
-                    spark, f"{base_path}/blocks", "blocks"
-                )
-            },
-            _time.perf_counter() - t_stats,
-        )
-
-    import os as _os
-
-    fresh_fused = (
-        fused
-        and _os.environ.get("SPARK_GRAFT_FUSED_OVERLAP", "1") != "0"
-        and not manifest.stage_complete("stats")
-        and not manifest.stage_complete("blocks")
-    )
-    with _build_confs():
-        if fresh_fused:
-            stats_blocks_overlapped()
-        else:
-            run_stage(manifest, "stats", f"{base_path}/term_stats", stage_stats)
+        run_stage(manifest, "partials", f"{base_path}/partials", stage_emit)
+        stats_and_blocks(spark, base_path, manifest, hot_min_df, salt_shift)
 
     def _field_stage(name: str, postings_maker):
         """Extra-field stage (``index/anchors.py`` tables): postings
@@ -1151,45 +997,6 @@ def build_and_write(
         with _build_confs():
             run_stage(manifest, "boosts", f"{base_path}/doc_boosts", stage_boosts)
 
-    if with_blocks:
-
-        def stage_blocks():
-            from .blocks import SALT_SHIFT, build_blocks_from_partials
-
-            partials = _read_stage_table(spark, base_path, "partials")
-            term_stats = _read_stage_table(spark, base_path, "term_stats")
-            # corpus stats come from the stats stage's manifest counters
-            # (present even on resume); parquet is the fallback for
-            # manifests written before these counters existed
-            st = manifest.stages.get("stats", {}).get("counters", {})
-            if "n_docs" in st and "avgdl" in st:
-                n_docs, avgdl = st["n_docs"], st["avgdl"]
-            else:
-                corpus = spark.read.parquet(f"{base_path}/corpus_stats").first()
-                n_docs, avgdl = corpus["n_docs"], corpus["avgdl"]
-
-            blocks = build_blocks_from_partials(
-                partials,
-                term_stats,
-                n_docs=n_docs,
-                avgdl=avgdl,
-                hot_min_df=hot_min_df,
-                salt_shift=salt_shift if salt_shift is not None else SALT_SHIFT,
-            )
-            # block rows leave the re-blocker (term, first_doc)-
-            # sorted within partitions, so parquet row-group min/max
-            # stats prune term-filtered scans
-            blocks.write.mode("overwrite").parquet(f"{base_path}/blocks")
-            # footer-only count (driver-side on local paths — no job)
-            return {
-                "blocks_written": _footer_row_count(
-                    spark, f"{base_path}/blocks", "blocks"
-                )
-            }
-
-        with _build_confs():
-            run_stage(manifest, "blocks", f"{base_path}/blocks", stage_blocks)
-
     if with_forward:
 
         def stage_forward():
@@ -1203,14 +1010,9 @@ def build_and_write(
             to one row group. Opt-in: it costs one postings-sized
             shuffle + write, which builds that never serve by-doc
             access should not pay."""
-            if fused:
-                rows = postings_from_partials(
-                    _read_stage_table(spark, base_path, "partials")
-                ).select("doc_id", "term", "tf")
-            else:
-                rows = _read_stage_table(spark, base_path, "postings").select(
-                    "doc_id", "term", "tf"
-                )
+            rows = postings_from_partials(
+                _read_stage_table(spark, base_path, "partials")
+            ).select("doc_id", "term", "tf")
             agg = rows.groupBy("doc_id").agg(
                 F.sort_array(F.collect_list(F.struct("term", "tf"))).alias(
                     "terms"
@@ -1246,50 +1048,28 @@ def build_and_write(
 def load_index(spark: SparkSession, base_path: str) -> InvertedIndex:
     """Load an index from a build directory (parquet) or a published
     Iceberg catalog namespace (dotted identifier, see
-    ``sources/catalog.py::publish_index``)."""
+    ``sources/catalog.py::publish_index``). ``postings`` is the row view
+    decoded from the partial blocks."""
     from ..sources.catalog import is_catalog_identifier
 
-    sep = "." if is_catalog_identifier(base_path) else "/"
-    read = (
-        spark.read.table
-        if sep == "."
-        else spark.read.parquet
-    )
-    if sep == "/":
-        # probe via the Hadoop FS API (file://, hdfs://, s3a:// all
-        # work) instead of letting spark.read throw PATH_NOT_FOUND —
-        # the thrown probe dumps a full Java stacktrace into every
-        # serving log for fused builds, which never materialize the
-        # row-postings directory
+    if is_catalog_identifier(base_path):
+        read = lambda name: spark.read.table(f"{base_path}.{name}")  # noqa: E731
+        has_forward = spark.catalog.tableExists(f"{base_path}.forward")
+    else:
         from ..streaming.incremental import _fs_and_path
 
-        fs, jpath, _jvm = _fs_and_path(spark, f"{base_path}/postings")
-        has_postings = fs.exists(jpath)
-    else:
-        has_postings = spark.catalog.tableExists(f"{base_path}.postings")
-    if sep == "/":
         # schema-pinned reads: no schema-inference job per table (4-5
         # scheduling round trips of pure fixed cost per build/load)
-        read = lambda p: _read_stage_table(  # noqa: E731
-            spark, base_path, p.rsplit(sep, 1)[-1]
-        )
-    if has_postings:
-        postings = read(f"{base_path}{sep}postings")
-    else:
-        # fused build: row postings were never materialized — serve the
-        # decoded view over the partial blocks (row-identical)
-        postings = postings_from_partials(read(f"{base_path}{sep}partials"))
-    forward = None
-    if sep == "/":
-        fwd_fs, fwd_jpath, _ = _fs_and_path(spark, f"{base_path}/forward")
-        if fwd_fs.exists(fwd_jpath):
-            forward = read(f"{base_path}/forward")
-    elif spark.catalog.tableExists(f"{base_path}.forward"):
-        forward = read(f"{base_path}.forward")
+        read = lambda name: _read_stage_table(spark, base_path, name)  # noqa: E731
+        # probe via the Hadoop FS API (file://, hdfs://, s3a:// all
+        # work) instead of letting spark.read throw PATH_NOT_FOUND into
+        # the serving log for builds without the opt-in forward table
+        fs, jpath, _ = _fs_and_path(spark, f"{base_path}/forward")
+        has_forward = fs.exists(jpath)
     return InvertedIndex(
-        postings,
-        read(f"{base_path}{sep}term_stats"),
-        read(f"{base_path}{sep}doc_stats"),
-        read(f"{base_path}{sep}corpus_stats"),
-        forward=forward,
+        postings_from_partials(read("partials")),
+        read("term_stats"),
+        read("doc_stats"),
+        read("corpus_stats"),
+        forward=read("forward") if has_forward else None,
     )

@@ -16,7 +16,7 @@ the deployment seam:
   paths. Semantics are identical either way: ``overwrite`` replaces,
   ``append`` adds.
 * ``publish_index`` — copy a built :class:`~..index.build.InvertedIndex`
-  (plus the compressed block-max postings table, when present) into an
+  — its partials, block-max blocks, stats and doc_map — into an
   Iceberg namespace. Publishing is a flat re-write of already-built
   tables — no tokenize/shuffle is re-run — so a parquet build on the
   cluster followed by an Iceberg publish costs one scan per table.
@@ -41,11 +41,12 @@ __all__ = [
     "publish_index",
 ]
 
-#: index member tables published to the catalog, in write order;
-#: doc_map (docID → url, what serving needs to render results) is NOT
-#: derivable from the others and must ship with the index
+#: index member tables published to the catalog, in write order:
+#: partials (the posting data; ``load_index`` decodes the row view from
+#: them) and blocks are what every index writer produces; doc_map
+#: (docID → url, what serving needs to render results) is NOT derivable
+#: from the others and must ship with the index
 INDEX_TABLES = (
-    "postings",
     "partials",
     "doc_map",
     "term_stats",
@@ -55,11 +56,10 @@ INDEX_TABLES = (
     "forward",
 )
 
-#: members a build may legitimately lack: with_blocks=False builds have
-#: no blocks/partials; fused builds (with_blocks=True) materialize
-#: partials instead of row postings; forward is the opt-in doc-keyed
-#: projection (with_forward=True)
-_OPTIONAL_TABLES = frozenset({"blocks", "partials", "postings", "forward"})
+#: members a build may legitimately lack: forward is the opt-in
+#: doc-keyed projection (with_forward=True); a directory missing any
+#: other member is a truncated build or a wrong path
+_OPTIONAL_TABLES = frozenset({"forward"})
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -175,11 +175,12 @@ def publish_index(
     spark: SparkSession, base_path: str, namespace: str, mode: str = "overwrite"
 ) -> list[str]:
     """Publish a built index at ``base_path`` into catalog ``namespace``
-    (e.g. ``iceberg.search``) — one table per index member, the blocks
-    table (block-max metadata) included when the build wrote it.
+    (e.g. ``iceberg.search``) — one table per index member, the
+    opt-in forward table included when the build wrote it.
 
     Returns the list of published identifiers. Raises RuntimeError when
-    no Iceberg catalog is usable, BEFORE writing anything."""
+    no Iceberg catalog is usable, and the read error when a required
+    member is missing — both BEFORE writing anything."""
     if not iceberg_available(spark):
         raise RuntimeError(
             "no usable Iceberg catalog: configure spark.sql.catalog.<name> = "
@@ -190,19 +191,8 @@ def publish_index(
         try:
             frames[name] = spark.read.parquet(f"{base_path}/{name}")
         except Exception:
-            if name not in _OPTIONAL_TABLES:  # e.g. with_blocks=False builds
+            if name not in _OPTIONAL_TABLES:
                 raise
-    if not ({"postings", "partials"} & frames.keys()):
-        # both are optional INDIVIDUALLY (legacy builds have postings,
-        # fused builds have partials) — but an index with NEITHER has
-        # no posting data at all: a truncated/mis-pathed directory,
-        # not a valid build. Probed BEFORE any write so nothing is
-        # half-published.
-        raise RuntimeError(
-            f"{base_path} has neither 'postings' nor 'partials' — not a "
-            "complete index (truncated build or wrong path?); refusing "
-            "to publish a posting-less index"
-        )
     published = []
     for name in INDEX_TABLES:
         if name in frames:

@@ -11,8 +11,10 @@ Each microbatch appends a *postings delta* partitioned by ``batch_id``;
 deltas are doc-disjoint (docIDs are assigned from a monotonically
 increasing per-batch base recorded in the manifest), so the merged view
 is a UNION ALL — the same property that makes the salted block merge
-(I4) concatenation-safe. A compaction job (rerunning ``build_blocks``
-over the union) folds deltas into the block index.
+(I4) concatenation-safe. The deltas are the ingest log, not the served
+index: a compaction job packs their union into the batch build's one
+on-disk layout (``partials`` → stats → block-max ``blocks``, through
+the same ``index/build.py::stats_and_blocks`` step).
 
 No watermarks/session windows are needed: analysis is embarrassingly
 parallel per document (SURVEY §2.5 streaming note).
@@ -326,23 +328,26 @@ def compact_incremental(
     num_partitions: int | None = None,
     latest_only: bool = False,
 ) -> str:
-    """Fold all appended deltas into a FULL serving index — postings,
-    doc_map, term/doc/corpus stats, and compressed block-max postings —
-    at ``out_path`` (default ``{index_path}/compacted``). This is the
+    """Fold all appended deltas into a FULL serving index — partials,
+    doc_map, term/doc/corpus stats, and compressed block-max postings,
+    the batch build's layout (``load_index`` decodes the row postings
+    view) — at ``out_path`` (default a fresh versioned directory, see
+    below), with a ``manifest.json`` of stage timings. This is the
     second half of the batch-catchup pattern: the stream appends
     doc-disjoint deltas cheaply; compaction periodically rebuilds the
     WAND-servable block structures over their union.
 
     Because deltas are doc-disjoint by construction (manifest doc
     bases), their union IS the corpus postings — no re-aggregation.
-    The block build's map-side combine requires doc-CONTIGUOUS input
-    partitions (partials must be disjoint docID segments per term);
-    delta files are hash-partitioned by each micro-batch's groupBy, so
-    compaction range-repartitions by doc_id once — the one extra wide
-    shuffle this maintenance job pays, off the ingest path. The
-    resulting blocks are byte-identical to a from-scratch batch build
-    over the same corpus (the re-blocker cuts the same boundaries
-    regardless of partitioning) — pinned by
+    The Arrow pack stage (``index/blocks.py``) turns them into partials,
+    which must be disjoint docID segments per term; delta files are
+    hash-partitioned by each micro-batch's groupBy, so compaction
+    range-repartitions by doc_id once — the one extra wide shuffle this
+    maintenance job pays, off the ingest path. Stats and blocks then
+    run through :func:`..index.build.stats_and_blocks`, exactly as in
+    the batch build, so the output is byte-identical to a from-scratch
+    batch build over the same corpus (the re-blocker cuts the same
+    boundaries regardless of partitioning) — pinned by
     ``test_compact_incremental_equals_batch_build``.
 
     Serving-concurrency contract (round-3 verdict ask #4): with the
@@ -373,8 +378,12 @@ def compact_incremental(
     upsert window, postings semi-join the surviving doc set, and the
     recomputed stats describe the post-delete corpus.
     """
-    from ..index.blocks import build_blocks
-    from ..index.build import _stats_from_postings
+    from pyspark.sql import Window
+
+    from ..index.blocks import PARTIAL_SCHEMA, SALT_SHIFT, _pack_stage_arrow
+    from ..index.build import stats_and_blocks
+    from ..index.codec import BLOCK_SIZE
+    from ..index.manifest import BuildManifest, run_stage
 
     version = None
     if out_path is None:
@@ -402,8 +411,6 @@ def compact_incremental(
             .drop("_below")
         )
     if latest_only:
-        from pyspark.sql import Window
-
         # one window partition per url = one page's crawl history;
         # bounded by recrawl frequency, no corpus-wide hot key
         doc_map = (
@@ -415,37 +422,24 @@ def compact_incremental(
         )
     if latest_only or deletes is not None:
         postings = postings.join(doc_map.select("doc_id"), "doc_id", "left_semi")
-    term_stats, doc_stats, corpus_stats = _stats_from_postings(postings)
-    doc_stats.write.mode("overwrite").parquet(f"{out}/doc_stats")
-    term_stats.write.mode("overwrite").parquet(f"{out}/term_stats")
-    corpus_stats.write.mode("overwrite").parquet(f"{out}/corpus_stats")
-    corpus = spark.read.parquet(f"{out}/corpus_stats").first()
-
     n_parts = num_partitions or spark.sparkContext.defaultParallelism
-    # denormalize doc_len back onto posting rows (the batch emitter's
-    # shape) and restore doc-contiguity; the within-partition sort
-    # keeps every parquet row group a disjoint docID range, so any
-    # later byte-split read stays segment-safe for the pack stage
-    arranged = (
-        postings.join(spark.read.parquet(f"{out}/doc_stats"), "doc_id")
-        .repartitionByRange(n_parts, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .select("term", "doc_id", "tf", "positions", "doc_len")
+    # restore doc-contiguity (each range partition is a disjoint docID
+    # segment, what the pack stage's partials must be) and denormalize
+    # doc_len = sum(tf) — the batch emitter's token count — onto every
+    # posting row; the window reuses the range partitioning, no shuffle
+    arranged = postings.repartitionByRange(n_parts, "doc_id").withColumn(
+        "doc_len", F.sum("tf").over(Window.partitionBy("doc_id")).cast("int")
     )
-    arranged.write.mode("overwrite").parquet(f"{out}/postings")
-    blocks = build_blocks(
-        spark.read.parquet(f"{out}/postings"),
-        spark.read.parquet(f"{out}/term_stats"),
-        n_docs=corpus["n_docs"],
-        avgdl=corpus["avgdl"],
-        hot_min_df=hot_min_df,
+    manifest = BuildManifest(out)
+    run_stage(
+        manifest,
+        "partials",
+        f"{out}/partials",
+        lambda: arranged.mapInArrow(
+            _pack_stage_arrow(frozenset(), SALT_SHIFT, BLOCK_SIZE), PARTIAL_SCHEMA
+        ).write.mode("overwrite").parquet(f"{out}/partials"),
     )
-    try:
-        blocks.write.mode("overwrite").parquet(f"{out}/blocks")
-    finally:
-        partials = getattr(blocks, "_partials_df", None)
-        if partials is not None:
-            partials.unpersist()
+    stats_and_blocks(spark, out, manifest, hot_min_df=hot_min_df)
     doc_map.write.mode("overwrite").parquet(f"{out}/doc_map")
     if version is not None:
         _flip_pointer(spark, index_path, version, out)

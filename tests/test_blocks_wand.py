@@ -437,94 +437,15 @@ def test_direct_block_reader_positions_and_errors(spark, materialized):
         DirectBlockReader("/tmp/definitely_missing_block_dir_xyz")
 
 
-def test_arrow_blocks_byte_identical_to_pandas(spark, materialized):
-    """The Arrow-native pack/reblock stages (the default) must produce
-    BYTE-identical block rows to the pandas reference stages — same
-    cuts, same varint payloads, same metadata — with salting active
-    (salt_shift=3 genuinely splits terms) and without."""
-    postings = materialized.postings
-    term_stats = spark.read.parquet(f"{BASE}/term_stats")
-    corpus = spark.read.parquet(f"{BASE}/corpus_stats").first()
-    for kwargs in (
-        dict(hot_min_df=1, salt_shift=3, num_partitions=48),
-        dict(hot_min_df=10**9),
-    ):
-        frames = {}
-        for impl in ("arrow", "pandas"):
-            df = build_blocks(
-                postings,
-                term_stats,
-                n_docs=corpus["n_docs"],
-                avgdl=corpus["avgdl"],
-                impl=impl,
-                **kwargs,
-            )
-            frames[impl] = sorted(
-                (
-                    (
-                        r["term"],
-                        r["first_doc"],
-                        r["n_docs"],
-                        bytes(r["doc_deltas"]),
-                        bytes(r["tfs"]),
-                        bytes(r["pos_deltas"]),
-                        bytes(r["doc_lens"]),
-                        r["block_max_tf"],
-                        round(r["block_max_impact"], 12),
-                    )
-                    for r in df.collect()
-                )
-            )
-            df._partials_df.unpersist()
-        assert frames["arrow"] == frames["pandas"]
-        assert len(frames["arrow"]) > 0
-
-
-def test_fused_build_row_identical_to_legacy(spark, materialized, tmp_path):
-    """The fused serving build (partials checkpoint, decoded row-postings
-    view) and the legacy layout (with_blocks=False materializes the row
-    table) must agree row-for-row — postings (incl. position payload
-    bytes) and every stats table — over the same corpus."""
-    from mecab_ko_lucene_analyzer_spark.index.build import load_index
-
-    pages = synthesize_webpages(spark, N_DOCS, partitions=4)
-    legacy = build_and_write(
-        pages, f"{tmp_path}/legacy", lang_filter=None, with_blocks=False
-    )
-    # fresh load: the module fixture's captured stats plans go stale
-    # when the resume test rewrites those directories
-    fused = load_index(spark, BASE)
-
-    def rows(df, cols, key):
-        return sorted(
-            (tuple(bytes(v) if isinstance(v, bytearray) else v for v in t)
-             for t in df.select(*cols).collect()),
-            key=key,
-        )
-
-    pcols = ["term", "doc_id", "tf", "positions", "doc_len"]
-    a = rows(fused.postings, pcols, lambda t: (t[0], t[1]))
-    b = rows(legacy.postings, pcols, lambda t: (t[0], t[1]))
-    assert len(a) == len(b) > 0 and a == b
-    for attr, cols, key in [
-        ("term_stats", ["term", "df"], lambda t: t[0]),
-        ("doc_stats", ["doc_id", "doc_len"], lambda t: t[0]),
-        ("corpus_stats", ["n_docs", "avgdl"], lambda t: t[0]),
-    ]:
-        assert rows(getattr(fused, attr), cols, key) == rows(
-            getattr(legacy, attr), cols, key
-        ), attr
-
-
-def test_pack_reblock_arrow_equals_pandas(spark, materialized):
-    """The Arrow-native pack/reblock stages must be BYTE-identical to
-    the pandas reference implementation — same block rows, same varint
-    payloads, same impacts — including under aggressive salting."""
+def _arrow_and_pandas_block_rows(spark, materialized, **kw):
+    """Build the blocks table once per pack/reblock implementation over
+    the module index and return both sorted row lists (binary columns as
+    bytes) as ``(arrow_rows, pandas_rows)``."""
     postings = materialized.postings
     term_stats = spark.read.parquet(f"{BASE}/term_stats")
     corpus = spark.read.parquet(f"{BASE}/corpus_stats").first()
 
-    def rows(impl, **kw):
+    def rows(impl):
         df = build_blocks(
             postings, term_stats, corpus["n_docs"], corpus["avgdl"],
             impl=impl, **kw,
@@ -537,10 +458,85 @@ def test_pack_reblock_arrow_equals_pandas(spark, materialized):
         df._partials_df.unpersist()
         return out
 
+    return rows("arrow"), rows("pandas")
+
+
+def test_arrow_blocks_byte_identical_to_pandas(spark, materialized):
+    """The Arrow-native pack/reblock stages (the default) must produce
+    BYTE-identical block rows to the pandas reference stages — same
+    cuts, same varint payloads, same metadata and impacts — with
+    salting active (salt_shift=3 genuinely splits terms) across 48
+    range partitions."""
+    kw = {"hot_min_df": 1, "salt_shift": 3, "num_partitions": 48}
+    a, p = _arrow_and_pandas_block_rows(spark, materialized, **kw)
+    assert len(a) == len(p) > 0 and a == p, kw
+
+
+def test_pack_reblock_arrow_equals_pandas(spark, materialized):
+    """The Arrow-native pack/reblock stages must be BYTE-identical to
+    the pandas reference implementation — same block rows, same varint
+    payloads, same impacts — without salting and under aggressive
+    salting at the default partition count."""
     for kw in ({"hot_min_df": 10**9}, {"hot_min_df": 1, "salt_shift": 3}):
-        a = rows("arrow", **kw)
-        p = rows("pandas", **kw)
+        a, p = _arrow_and_pandas_block_rows(spark, materialized, **kw)
         assert len(a) == len(p) > 0 and a == p, kw
+
+
+def test_fused_build_rows_match_token_stream_recount(spark, materialized):
+    """The decoded row-postings view and every stats table of the
+    fused build must equal a recount in this process from the analyzer's
+    own token stream, doc by doc: tf, position payload bytes, doc_len,
+    df, n_docs and avgdl."""
+    from mecab_ko_lucene_analyzer_spark.analysis.tokenizer import (
+        get_lattice_provider,
+        index_token_stream,
+    )
+    from mecab_ko_lucene_analyzer_spark.index.build import load_index
+    from mecab_ko_lucene_analyzer_spark.index.codec import encode_varints
+
+    import numpy as np
+
+    # fresh load: the module fixture's captured stats plans go stale
+    # when the resume test rewrites those directories
+    fused = load_index(spark, BASE)
+    text_of = {
+        r["url"]: r["text"]
+        for r in synthesize_webpages(spark, N_DOCS, partitions=5).collect()
+    }
+    url_of = {
+        r["doc_id"]: r["url"] for r in spark.read.parquet(f"{BASE}/doc_map").collect()
+    }
+    assert len(url_of) == len(text_of) == N_DOCS
+    provider = get_lattice_provider()
+    want_postings, doc_len, df = [], {}, {}
+    for doc_id, url in url_of.items():
+        terms, incrs = index_token_stream(text_of[url], "standard", 3, provider)
+        positions: dict[str, list[int]] = {}
+        pos = -1
+        for term, inc in zip(terms, incrs):
+            pos += inc
+            positions.setdefault(term, []).append(pos)
+        doc_len[doc_id] = len(terms)
+        for term, plist in positions.items():
+            deltas = np.diff(np.asarray([0] + plist, dtype=np.int64))
+            want_postings.append(
+                (term, doc_id, len(plist), encode_varints(deltas), len(terms))
+            )
+            df[term] = df.get(term, 0) + 1
+
+    def rows(df_, cols):
+        return sorted(
+            tuple(bytes(v) if isinstance(v, bytearray) else v for v in t)
+            for t in df_.select(*cols).collect()
+        )
+
+    got = rows(fused.postings, ["term", "doc_id", "tf", "positions", "doc_len"])
+    assert len(got) > 0 and got == sorted(want_postings)
+    assert rows(fused.term_stats, ["term", "df"]) == sorted(df.items())
+    assert rows(fused.doc_stats, ["doc_id", "doc_len"]) == sorted(doc_len.items())
+    corpus = fused.corpus_stats.first()
+    assert corpus["n_docs"] == N_DOCS
+    assert abs(corpus["avgdl"] - sum(doc_len.values()) / N_DOCS) < 1e-9
 
 
 def test_arrow_stages_sliced_emission_identical(spark, materialized, monkeypatch):
@@ -582,8 +578,9 @@ def test_arrow_stages_sliced_emission_identical(spark, materialized, monkeypatch
 def test_blocks_params_change_invalidates_manifest(spark, tmp_path):
     """Rerunning build_and_write with different salting parameters must
     re-execute the stages, not silently serve the old blocks — the
-    manifest fingerprint includes (with_blocks, hot_min_df,
-    salt_shift)."""
+    manifest fingerprint includes (hot_min_df, salt_shift). The
+    block-max layout is the only one written: with_blocks=False raises
+    before any stage runs."""
     import glob
     import json
     import os
@@ -593,7 +590,11 @@ def test_blocks_params_change_invalidates_manifest(spark, tmp_path):
     build_and_write(pages, base, lang_filter=None, with_blocks=True,
                     hot_min_df=10**9)
     with open(f"{base}/manifest.json") as f:
-        assert json.load(f)["config"]["hot_min_df"] == 10**9
+        config = json.load(f)["config"]
+    assert config["hot_min_df"] == 10**9 and "with_blocks" not in config
+    with pytest.raises(ValueError, match="with_blocks"):
+        build_and_write(pages, str(tmp_path / "rows"), with_blocks=False)
+    assert not os.path.exists(tmp_path / "rows")
     mt = {f: os.path.getmtime(f) for f in glob.glob(f"{base}/blocks/*")}
 
     # same params → all stages skipped, nothing rewritten

@@ -203,11 +203,12 @@ def test_iceberg_unavailable_in_container(spark, tmp_path):
 
 
 def test_publish_index_refuses_postingless_dir(spark, tmp_path, monkeypatch):
-    """'postings' and 'partials' are optional INDIVIDUALLY (legacy vs
-    fused layouts) but an index with NEITHER is a truncated build:
-    publish_index must raise before writing anything, not publish a
-    posting-less index."""
+    """'partials' (the posting data) is a required index member: a
+    directory without it is a truncated build, and publish_index must
+    raise through the required-table read before writing anything, not
+    publish a posting-less index."""
     import pytest
+    from pyspark.errors import AnalysisException
 
     from mecab_ko_lucene_analyzer_spark.sources import catalog as cat_mod
 
@@ -216,14 +217,14 @@ def test_publish_index_refuses_postingless_dir(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         cat_mod, "write_table", lambda df, t, mode="overwrite": written.append(t)
     )
-    # a directory with every REQUIRED table but no posting data at all
-    for name in ("doc_map", "term_stats", "doc_stats", "corpus_stats"):
+    # a directory with every other required table but no posting data
+    for name in ("doc_map", "term_stats", "doc_stats", "corpus_stats", "blocks"):
         spark.range(3).toDF("doc_id").write.parquet(f"{tmp_path}/{name}")
-    with pytest.raises(RuntimeError, match="neither 'postings' nor 'partials'"):
+    with pytest.raises(AnalysisException, match="partials"):
         cat_mod.publish_index(spark, str(tmp_path), "iceberg.search")
     assert written == []  # probed before ANY write
 
-    # with partials present (fused layout) the same dir publishes fine
+    # with partials present the same dir publishes fine
     spark.range(3).toDF("doc_id").write.parquet(f"{tmp_path}/partials")
     out = cat_mod.publish_index(spark, str(tmp_path), "iceberg.search")
     assert "iceberg.search.partials" in out and written == out

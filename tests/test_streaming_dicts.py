@@ -128,10 +128,10 @@ def test_compact_incremental_equals_batch_build(spark, tmp_path):
         return sorted((tuple(r) for r in df.select(*cols).collect()), key=key)
 
     pcols = ["term", "doc_id", "tf", "positions", "doc_len"]
-    a = rows(f"{out}/postings", pcols, lambda t: (t[0], t[1]))
-    # fused serving build: row postings are a decoded view over partials
+    # both layouts are partials: row postings are a decoded view
     from mecab_ko_lucene_analyzer_spark.index.build import load_index
 
+    a = df_rows(load_index(spark, out).postings, pcols, lambda t: (t[0], t[1]))
     b = df_rows(
         load_index(spark, f"{B}/batch").postings, pcols, lambda t: (t[0], t[1])
     )
@@ -479,7 +479,7 @@ def test_compact_latest_only_upserts_by_url(spark, tmp_path):
             for r in postings_df.collect()
         )
 
-    got = keyed(spark.read.parquet(f"{out}/postings"),
+    got = keyed(load_index(spark, out).postings,
                 {v: k for k, v in doc_map.items()})
     batch = load_index(spark, f"{B}/batch")
     batch_map = {
@@ -547,6 +547,7 @@ def test_delete_tombstones_fold_at_compaction(spark, tmp_path):
     compaction with nothing rewritten on the ingest path."""
     import datetime
 
+    from mecab_ko_lucene_analyzer_spark.index.build import load_index
     from mecab_ko_lucene_analyzer_spark.sources.webpages import WEBPAGES_SCHEMA
     from mecab_ko_lucene_analyzer_spark.streaming.incremental import (
         compact_incremental,
@@ -594,7 +595,7 @@ def test_delete_tombstones_fold_at_compaction(spark, tmp_path):
     # postings carry no doc_id outside the surviving doc_map
     alive = set(doc_map2.values())
     posting_docs = {r["doc_id"] for r in
-                    spark.read.parquet(f"{out2}/postings").collect()}
+                    load_index(spark, out2).postings.collect()}
     assert posting_docs == alive
 
     # a second delete of the (re-crawled) url takes the max horizon:
